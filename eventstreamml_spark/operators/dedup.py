@@ -65,16 +65,6 @@ def word_shingles(
     )
 
 
-def word_shingle_array(
-    docs: DataFrame, k: int = 3, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(doc_id, shingles: array<string>) nested form — collect of
-    :func:`word_shingles` for per-document signature expressions."""
-    return word_shingles(docs, k, id_col, text_col).groupBy(id_col).agg(
-        F.collect_list("shingle").alias("shingles")
-    )
-
-
 def minhash_signatures(
     shingles: DataFrame, n_perm: int = 16, id_col: str = "doc_id"
 ) -> DataFrame:

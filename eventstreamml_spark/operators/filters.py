@@ -20,13 +20,6 @@ UNIT_BOUNDS: dict[str, tuple[float, bool, float, bool]] = {
 }
 
 
-def canonical_column_order(df: DataFrame, mandatory: list[str]) -> DataFrame:
-    """P1: mandatory columns first, remainder sorted by name
-    (event_stream_dataset.py:542-544,587-592)."""
-    rest = sorted(c for c in df.columns if c not in mandatory)
-    return df.select(*[c for c in mandatory if c in df.columns], *rest)
-
-
 def drop_or_censor(
     val: Column,
     drop_lower_bound: Column | float | None = None,

@@ -946,16 +946,25 @@ def anova_oneway(
     global float sums whose summation-order noise (~√n·ε·Σx²) exceeds
     a 6dp grid at 100k+ rows — the ratio cancels it (CLAUDE.md rule).
     Groups with NULL values contribute nothing; k<2 or zero SSW NULLs
-    the statistic rather than dividing by zero."""
+    the statistic rather than dividing by zero.
+
+    Degeneracy is decided on exact min/max, never on the float sums:
+    one-pass ``s2 − s1²/n`` leaves partition-count-dependent noise where
+    the true sum of squares is 0, so a ``> 0`` guard on it flips with
+    the core count. SST is 0 exactly when the global min equals the
+    global max (eta_sq NULL); SSW is 0 exactly when every group's min
+    equals its max (f_stat NULL). The extremes ride the same
+    aggregation pass — no extra job."""
+    x = F.col(value_col).cast("double")
     g = (
         df.filter(F.col(value_col).isNotNull())
         .groupBy(F.col(group_col).alias("_g"))
         .agg(
             F.count(F.lit(1)).cast("double").alias("_n"),
-            F.sum(F.col(value_col).cast("double")).alias("_s1"),
-            F.sum(
-                F.col(value_col).cast("double") * F.col(value_col).cast("double")
-            ).alias("_s2"),
+            F.sum(x).alias("_s1"),
+            F.sum(x * x).alias("_s2"),
+            F.min(x).alias("_lo"),
+            F.max(x).alias("_hi"),
         )
     )
     tot = g.groupBy().agg(
@@ -966,6 +975,8 @@ def anova_oneway(
             "_ssw"
         ),
         F.sum(F.col("_s1") * F.col("_s1") / F.col("_n")).alias("_sb_part"),
+        (F.min("_lo") < F.max("_hi")).alias("_spread"),
+        F.bool_or(F.col("_lo") < F.col("_hi")).alias("_within"),
     )
     ssb = F.col("_sb_part") - F.col("_st") * F.col("_st") / F.col("_nt")
     ssw = F.col("_ssw")
@@ -976,8 +987,10 @@ def anova_oneway(
     return tot.select(
         F.col("_k").cast("long").alias("k_groups"),
         F.col("_nt").cast("long").alias("n_total"),
-        F.round(fstat, 6).alias("f_stat"),
-        F.when(ssb + ssw > 0, F.round(ssb / (ssb + ssw), 6)).alias("eta_sq"),
+        F.when(F.col("_within"), F.round(fstat, 6)).alias("f_stat"),
+        F.when(
+            F.col("_spread"), F.round(F.try_divide(ssb, ssb + ssw), 6)
+        ).alias("eta_sq"),
     )
 
 

@@ -74,15 +74,3 @@ def codegen_stage_count(df: DataFrame) -> int:
     )
     m = re.search(r"Found (\d+) WholeStageCodegen subtrees", s)
     return int(m.group(1)) if m else 0
-
-
-def assert_pushdown(df: DataFrame, fragment: str) -> None:
-    filters = pushed_filters(df)
-    assert any(fragment in f for f in filters), (
-        f"expected a pushed filter containing {fragment!r}; got {filters}"
-    )
-
-
-def assert_reads_only(df: DataFrame, allowed: set[str]) -> None:
-    got = set(read_schema_columns(df))
-    assert got <= allowed, f"scan reads {sorted(got - allowed)} beyond allowed {sorted(allowed)}"

@@ -440,7 +440,7 @@ CODEGEN_FLOORS = {
 
 # Round-12: the pq family's fold projections moved to Arrow kernels
 # (mapInPandas, bit-identical dim-loop arithmetic — similarity.py
-# pq_encode / pair_dot_arrow), so their failure mode is no longer "fold
+# pq_encode), so their failure mode is no longer "fold
 # silently interpreted" but "kernel silently replaced by expression
 # work"; pin the kernel's presence in the executed plan instead.
 ARROW_KERNEL_FLOORS = {

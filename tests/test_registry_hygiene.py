@@ -402,3 +402,92 @@ def test_registration_order_matches_manifest():
         "new registrations must be folded into registry_order.py in the "
         f"same commit: {unpinned}"
     )
+
+
+# sha256 over the ordered registry names, each oracle string and the
+# oracle key order. Moving or refactoring query code must leave the
+# driver contract byte-identical; only a deliberate registry change
+# (new name, reworded oracle) updates this constant, in the same commit.
+REGISTRY_FINGERPRINT = (
+    "d9c7718e84418fcfb06da44037e5c44921e56521d23324cfd6e0c419247b8538"
+)
+
+
+def test_registry_fingerprint_is_pinned():
+    """The driver sees names, their order and the oracle SQL text —
+    hash exactly that and pin it, so a refactor that touches an oracle
+    string by one byte (or reorders registrations) fails here."""
+    import hashlib
+    import json
+
+    qs, os_ = q.queries(), q.oracle_sql()
+    h = hashlib.sha256()
+    for name in qs:
+        h.update(name.encode() + b"\0")
+        h.update(os_.get(name, "").encode() + b"\0")
+    h.update(json.dumps(list(os_)).encode())
+    assert h.hexdigest() == REGISTRY_FINGERPRINT
+
+
+def _top_level_definitions(path):
+    """(name, line) of every top-level def/class in ``path`` except
+    dunders and ``@register``-decorated query functions (the registry
+    is their reference)."""
+    import ast
+
+    out = []
+    for node in ast.parse(path.read_text()).body:
+        if not isinstance(
+            node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+        ):
+            continue
+        if node.name.startswith("__") and node.name.endswith("__"):
+            continue
+        if any(
+            isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+            for d in node.decorator_list
+        ):
+            continue
+        out.append((node.name, node.lineno))
+    return out
+
+
+def test_no_unreferenced_top_level_definitions():
+    """Every top-level def/class in the package is referenced somewhere
+    in the package, tests, scripts, bench.py, perfbench/ or the driver
+    entry — code nothing reaches is deleted, not kept. A reference is
+    any identifier token outside comments (string mentions count, so
+    ``getattr``-style wiring is seen); the definition's own name token
+    is discounted."""
+    import collections
+    import io
+    import pathlib
+    import re
+    import tokenize
+
+    repo = pathlib.Path(__file__).resolve().parents[1]
+    pkg = repo / "eventstreamml_spark"
+    files = [
+        *pkg.rglob("*.py"),
+        *(repo / "tests").rglob("*.py"),
+        *(repo / "scripts").rglob("*.py"),
+        *(repo / "perfbench").rglob("*.py"),
+        repo / "bench.py",
+        repo / "__spark_entry__.py",
+    ]
+    word = re.compile(r"[A-Za-z_]\w*")
+    seen: collections.Counter[str] = collections.Counter()
+    for p in files:
+        for tok in tokenize.generate_tokens(io.StringIO(p.read_text()).readline):
+            if tok.type == tokenize.NAME:
+                seen[tok.string] += 1
+            elif tok.type == tokenize.STRING:
+                seen.update(word.findall(tok.string))
+    defs = collections.Counter()
+    where = {}
+    for p in sorted(pkg.rglob("*.py")):
+        for name, line in _top_level_definitions(p):
+            defs[name] += 1
+            where[name] = f"{p.relative_to(repo)}:{line}"
+    dead = sorted(where[n] + f" {n}" for n in defs if seen[n] <= defs[n])
+    assert not dead, f"unreferenced top-level definitions: {dead}"

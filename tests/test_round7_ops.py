@@ -64,6 +64,20 @@ class TestAnovaDegenerateEtaSq:
         r = anova_oneway(df, "g", "v").collect()[0]
         assert r["eta_sq"] is None
 
+    def test_constant_groups_null_f_stat(self, spark):
+        # SSW is exactly 0 when every group is constant; the one-pass
+        # float sums leave partition-dependent noise there, so f_stat
+        # must be NULLed on the exact per-group min == max, whether or
+        # not the groups differ from each other.
+        from eventstreamml_spark.operators.stats import anova_oneway
+
+        for vals in ((0.1, 0.1, 0.1), (0.1, 0.7, 1.3)):
+            rows = [(g, v) for g, v in zip("abc", vals) for _ in range(7)]
+            df = spark.createDataFrame(rows, "g string, v double")
+            r = anova_oneway(df, "g", "v").collect()[0]
+            assert r["f_stat"] is None
+        assert r["eta_sq"] == 1.0
+
     def test_brown_forsythe_constant_data(self, spark):
         from eventstreamml_spark.operators.stats import brown_forsythe
 

@@ -452,6 +452,28 @@ class TestRound8SequentialFolds:
                 spark, str(tmp_path), q.queries()[name], q.oracle_sql()[name]
             )
 
+    def test_fold_queries_bucket_pre_1970_like_oracle(self, spark, tmp_path):
+        # Hours straddling the epoch, events at hh:30. The oracles bucket
+        # with a truncating // (-1800 s and +1800 s share bucket 0); the
+        # Spark side must too, or the series has one bucket more.
+        import pandas as pd
+
+        rows, eid = [], 0
+        t0 = pd.Timestamp("1970-01-01 00:00:00")
+        for k, n in enumerate((1, 3, 1, 2, 2, 1, 40, 40)):
+            for j in range(n):
+                ts = t0 + pd.Timedelta(seconds=(k - 4) * 3600 + 1800 + j)
+                rows.append(
+                    (eid, str(ts), eid % 16,
+                     "purchase" if eid % 3 == 0 else "click", 1.0, None)
+                )
+                eid += 1
+        _write_events(tmp_path, rows)
+        name = "page_hinkley_hourly_drift"
+        compare(spark, str(tmp_path), q.queries()[name], q.oracle_sql()[name])
+        out = q.queries()[name](spark, str(tmp_path)).collect()
+        assert {r["n_points"] for r in out} == {7}
+
 
 class TestRound8SimilarityAndCorpus:
     def test_pq_adc_self_distance_smallest(self, spark):

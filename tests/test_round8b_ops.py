@@ -788,6 +788,29 @@ class TestProcessAndCounts:
         assert r["nb_r"] == pytest.approx(2.25 / (5 / 3 - 1.5), abs=1e-4)
         assert r["nb_p"] == pytest.approx(1.5 / (5 / 3), abs=1e-6)
 
+    def test_negbin_buckets_pre_1970_like_oracle(self, spark, tmp_path):
+        # Events at hh:30 from 3.5h before to 3.5h after the epoch, 1..8
+        # per hour. The oracle's CAST(floor(epoch(ts)) AS BIGINT) // 3600
+        # truncates toward zero, so -1800 s and +1800 s share bucket 0:
+        # 7 buckets [1, 2, 3, 4+5, 6, 7, 8], not 8 (floor division).
+        import pandas as pd
+
+        rows, eid = [], 0
+        t0 = pd.Timestamp("1970-01-01 00:00:00")
+        for k, c in enumerate(range(1, 9)):
+            for j in range(c):
+                ts = t0 + pd.Timedelta(seconds=(k - 4) * 3600 + 1800 + j)
+                rows.append((eid, str(ts), 1 + j, "click", None, None))
+                eid += 1
+        _write_events(tmp_path, rows)
+        name = "negative_binomial_fit_by_type"
+        compare(spark, str(tmp_path), q.queries()[name], q.oracle_sql()[name])
+        r = q.queries()[name](spark, str(tmp_path)).collect()[0]
+        assert r["n_hours"] == 7
+        assert r["mean_hourly"] == round(36 / 7, 6)
+        # (n*ss - t^2) / (n(n-1)) with ss = 244
+        assert r["var_hourly"] == round((7 * 244 - 36 * 36) / 42, 6)
+
     def test_negbin_underdispersed_is_null(self, spark, tmp_path):
         _hourly_counts_events(tmp_path, [2, 2, 2, 2, 2, 2, 2, 1])
         r = q.queries()["negative_binomial_fit_by_type"](
