@@ -16,6 +16,7 @@ import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -86,6 +87,38 @@ class TestAnovaDegenerateEtaSq:
         r = brown_forsythe(df, "g", "v").collect()[0]
         # |x - median| == 0 everywhere -> degenerate by construction
         assert r[3] is None  # eta_sq twin column
+
+
+@pytest.mark.parametrize("parts", [1, 2, 3, 4, 5, 6, 7, 8])
+class TestAnovaPartitionInvariance:
+    # The degenerate cases above, spread over 1..8 input partitions: the
+    # float sums' noise changes with the split, the NULL decisions must not.
+    def test_constant_data_nulls_both(self, spark, parts):
+        from eventstreamml_spark.operators.stats import anova_oneway
+
+        rows = [(g, 0.1) for g in ("a", "b", "c") for _ in range(7)]
+        df = spark.createDataFrame(rows, "g string, v double").repartition(parts)
+        r = anova_oneway(df, "g", "v").collect()[0]
+        assert (r["k_groups"], r["n_total"]) == (3, 21)
+        assert r["f_stat"] is None
+        assert r["eta_sq"] is None
+
+    def test_constant_groups_null_f_stat_only(self, spark, parts):
+        from eventstreamml_spark.operators.stats import anova_oneway
+
+        rows = [(g, v) for g, v in zip("abc", (0.1, 0.7, 1.3)) for _ in range(7)]
+        df = spark.createDataFrame(rows, "g string, v double").repartition(parts)
+        r = anova_oneway(df, "g", "v").collect()[0]
+        assert r["f_stat"] is None
+        assert r["eta_sq"] == 1.0
+
+    def test_brown_forsythe_constant_data(self, spark, parts):
+        from eventstreamml_spark.operators.stats import brown_forsythe
+
+        rows = [(g, 0.1) for g in ("a", "b", "c") for _ in range(7)]
+        df = spark.createDataFrame(rows, "g string, v double").repartition(parts)
+        r = brown_forsythe(df, "g", "v").collect()[0]
+        assert r[2] is None and r[3] is None
 
 
 class TestRidgeSingularRowParity:
